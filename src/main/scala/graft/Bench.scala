@@ -131,7 +131,7 @@ object Bench {
           ",\"env\":" + me.get + "}"
       }.mkString("{", ",", "}")
     val detail =
-      s"""{"metric":"total","value":$total,"unit":"sec","iterations":$iterations,"sf":"$sfDir","failed":$failedJson,"watch_env":$watchEnv,"queries":$detailQs}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","iterations":$iterations,"sf":"$sfDir","failed":$failedJson,"io":${EnvCounters.ioJson(spark)},"watch_env":$watchEnv,"queries":$detailQs}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
       detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     System.err.println(s"[bench] full per-iteration record: $detailPath")

@@ -98,7 +98,7 @@ object BenchFull {
       try new java.io.File(sfDir).listFiles().map(_.lastModified()).max / 1000
       catch { case _: Throwable => 0L }
     val json = new StringBuilder
-    json ++= s"""{"context":{"benchmark_version":"${BuildInfo.version}","engine":"graft-spark","num_cpus":${Runtime.getRuntime.availableProcessors},"start_time":${System.currentTimeMillis() / 1000},"commit":"$commit","testdata_mtime":$fixtureMtime,"plan_cache":$cachedMode,"arguments":["$sfDir","iterations=$iterations"]},"queries":["""
+    json ++= s"""{"context":{"benchmark_version":"${BuildInfo.version}","engine":"graft-spark","num_cpus":${Runtime.getRuntime.availableProcessors},"start_time":${System.currentTimeMillis() / 1000},"commit":"$commit","testdata_mtime":$fixtureMtime,"plan_cache":$cachedMode,"io":${EnvCounters.ioJson(spark)},"arguments":["$sfDir","iterations=$iterations"]},"queries":["""
     json ++= results.map { case (name, qStart, success, iters) =>
       val arr = iters.map { case (ms, n, env) =>
         s"""{"elapsed":$ms,"row_count":$n,"env":$env}"""

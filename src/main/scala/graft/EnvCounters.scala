@@ -30,6 +30,9 @@ import org.apache.spark.sql.SparkSession
   *    orphaned-checkpoint hazard made late-suite queries 5x slower; this
   *    pins whether the adjudicated run entered a query pre-loaded).
   *
+  * Once per run, [[ioJson]] records the local I/O facts that decide
+  * whether writing a local file forks processes (see [[graft.io.LocalIO]]).
+  *
   * (Reference analog: benchmarks/src/util/run.rs:93-132 — the results
   * file records what the environment WAS, not just the number.)
   *
@@ -116,6 +119,17 @@ object EnvCounters {
       spins += 1
     }
     snap(spark)
+  }
+
+  /** Once-per-run I/O facts: the class `file:` resolves to, and whether
+    * libhadoop is loaded (`NativeIO.isAvailable`). A jar that brings back a
+    * forking local file system, as hive-exec's ServiceLoader entry once
+    * did silently, shows up here. */
+  def ioJson(spark: SparkSession): String = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI("file:///"), spark.sparkContext.hadoopConfiguration)
+    s"""{"file_fs":"${fs.getClass.getName}",""" +
+      s""""native_io":${org.apache.hadoop.io.nativeio.NativeIO.isAvailable}}"""
   }
 
   /** JSON object of the deltas across one iteration; `storeMb` reports

@@ -85,6 +85,18 @@ case class GraftTuning(
   *  - shuffle.partitions matches local cores here; on a real cluster this is
   *    a deploy-time setting (AQE coalesces down from it).
   *  - UTC session timezone so results are reproducible against any oracle.
+  *  - Local I/O starts no processes ([[graft.io.LocalIO]]). Without
+  *    libhadoop, Hadoop forks `chmod` for every local file create and
+  *    mkdir and `readlink` twice for every FileContext rename, which made
+  *    a streaming state commit cost ~0.5 s a micro-batch at any input
+  *    size. `fs.file.impl` pins `file:` to a `LocalFileSystem` that sets
+  *    the same permissions through `java.nio` (otherwise `file:` resolves
+  *    to whichever jar's ServiceLoader entry wins, Hive's
+  *    `ProxyLocalFileSystem` here). The checkpoint file manager uses
+  *    Spark's FileSystem-based manager for `file:` checkpoints, where
+  *    rename(2) is atomic, and keeps Spark's default FileContext manager
+  *    for every other scheme (HDFS, object stores), whose atomic rename
+  *    those stores rely on.
   */
 object GraftSession {
 
@@ -155,6 +167,9 @@ object GraftSession {
       // and the copy itself is not the bottleneck for 32 MB-scale spills
       .config("spark.file.transferTo", "false")
       .config("graft.plan.cache", t.planCache.toString)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.ForklessLocalFileSystem].getName)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.io.ForklessCheckpointFileManager].getName)
     val b2 = scratchDir.fold(b1)(d => b1.config("spark.local.dir", d))
     // in.memory.threshold moves rows into the UnsafeExternalSorter once
     // exceeded; spill.threshold then forces that sorter to disk — both are

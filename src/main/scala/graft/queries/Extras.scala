@@ -266,11 +266,13 @@ object Extras {
       val cross = leads
         .select(col("c_name"), col("n"), explode(col("nbrs")).as("p"))
         .filter(col("p.bname").isNotNull)
-        // thresholded levenshtein: the 3-arg form runs the banded DP
-        // (O(threshold·len) per pair with length-difference early-out,
-        // vs O(len²) unbounded) and returns -1 past the threshold — for
-        // the kept pairs (0..2) the distance value is identical, so the
-        // histogram is unchanged; the oracle stays the plain predicate.
+        // thresholded levenshtein: the 3-arg form runs a banded DP with a
+        // length-difference early-out and returns -1 past the threshold;
+        // for the kept pairs (0..2) the distance is identical, so the
+        // histogram is unchanged and the oracle stays the plain predicate.
+        // Measured flat, not faster: in an order-alternating A/B it read
+        // 1.51x WORSE in one pass order at sf0.1 (1.15x worse at 10x) and
+        // better only in the other. Kept for the bounded per-pair work.
         .select(levenshtein(col("c_name"), col("p.bname"), 2).as("dist"),
           (col("n") * col("p.bn")).as("w"))
         .filter(col("dist") >= 0)

@@ -59,14 +59,22 @@ object StreamRuns {
     * AdaptiveGate's small-plan width floor. */
   private val StatePartitions = 4
 
+  /** The events columns every replay layout writes, typed as the written
+    * files are (the sentinel rows union in as BIGINT/STRING/DOUBLE).
+    * [[runStream]] declares this projection's analyzed schema to the file
+    * stream, so no job reads the files back to infer it. */
+  private[graft] def replayEvents(spark: SparkSession, dir: String): DataFrame =
+    Catalog.table(spark, dir, "events")
+      .select(col("user_id").cast("long").as("user_id"),
+        expr("ts div 1000").as("ts_us"), col("event_id").cast("long").as("event_id"),
+        col("event_type"), col("value").cast("double").as("value"))
+
   /** Build (once per fixture dir) the time-bucketed replay layout:
     * `<root>/data/evt_{00..05}.parquet`, last two files = sentinels. */
-  private def replayRoot(spark: SparkSession, dir: String): String =
+  private[graft] def replayRoot(spark: SparkSession, dir: String): String =
     TextOps.cachedLayout("sreplay", dir) { root =>
       val dataDir = new java.io.File(root, "data"); dataDir.mkdirs()
-      val e = Catalog.table(spark, dir, "events")
-        .select(col("user_id"), expr("ts div 1000").as("ts_us"),
-          col("event_id"), col("event_type"), col("value"))
+      val e = replayEvents(spark, dir)
       val w = Window.orderBy(col("ts_us"), col("event_id"))
       val maxUs = e.agg(max(col("ts_us"))).head().getLong(0)
       val sentinels = spark.range(2).select(
@@ -107,9 +115,7 @@ object StreamRuns {
   private[queries] def lateReplayRoot(spark: SparkSession, dir: String): String =
     TextOps.cachedLayout("slatereplay", dir) { root =>
       val dataDir = new java.io.File(root, "data"); dataDir.mkdirs()
-      val e = Catalog.table(spark, dir, "events")
-        .select(col("user_id"), expr("ts div 1000").as("ts_us"),
-          col("event_id"), col("event_type"), col("value"))
+      val e = replayEvents(spark, dir)
       val w = Window.orderBy(col("ts_us"), col("event_id"))
       val maxUs = e.agg(max(col("ts_us"))).head().getLong(0)
       val sentinels = spark.range(2).select(
@@ -148,7 +154,7 @@ object StreamRuns {
       lateSemantics: Boolean = false)(
       build: DataFrame => DataFrame): DataFrame = {
     val data = layout(spark, dir) + "/data"
-    val schema = spark.read.parquet(data).schema
+    val schema = replayEvents(spark, dir).schema
     // files per micro-batch. The three LATE replays pin it at 1
     // (lateSemantics): their oracles' lagged-watermark arithmetic encodes
     // WHICH file lands in which batch (file 0's max is the filter
@@ -178,16 +184,7 @@ object StreamRuns {
       .option("maxFilesPerTrigger", mft)
       .parquet(data)
     spark.catalog.dropTempView(sinkName) // re-runs in the same JVM (Bench)
-    // checkpoint on the tmpfs scratch root: a bounded replay writes
-    // (stores x partitions x batches) state-delta files plus one offset
-    // and one commit log per batch, each fsync'd — short-lived scratch,
-    // the same class GraftSession already routes to tmpfs for shuffle.
-    // `graft.stream.scratchCkpt=false` keeps the JVM temp dir (the A/B
-    // arm, and the escape hatch if a host has no usable tmpfs).
-    val ckpt =
-      if (spark.conf.getOption("graft.stream.scratchCkpt").forall(_ == "true"))
-        TextOps.scratchTempDir("graft-sreplay-ckpt-")
-      else TextOps.trackedTempDir("graft-sreplay-ckpt-")
+    val ckpt = TextOps.trackedTempDir("graft-sreplay-ckpt-")
     // a fresh checkpoint bakes the partition count in at first batch, so
     // the narrowed conf only ever applies to this stream's state stores
     val prev = spark.conf.get("spark.sql.shuffle.partitions")

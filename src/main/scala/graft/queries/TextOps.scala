@@ -276,24 +276,6 @@ object TextOps {
     p.toString
   }
 
-  /** Like [[trackedTempDir]] but preferring the session's tmpfs scratch
-    * root ([[graft.GraftSession.scratchDir]]) when one exists — for
-    * SHORT-LIVED write-heavy scratch (streaming replay checkpoints: state
-    * deltas + offset/commit logs are fsync-per-file on local disk and
-    * short-lived by construction). Same lifecycle as every tracked dir:
-    * deleted at JVM exit. Falls back to the JVM temp dir when no tmpfs
-    * scratch is available — identical semantics, slower medium. */
-  private[queries] def scratchTempDir(prefix: String): String = {
-    val p = graft.GraftSession.scratchDir match {
-      case Some(root) =>
-        java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get(root), prefix)
-      case None => java.nio.file.Files.createTempDirectory(prefix)
-    }
-    matDirs.add(p)
-    p.toString
-  }
-
   /** Per-JVM cache of IMMUTABLE materialized layouts (partitioned
     * rewrites, version logs): the layout of a given (tag, source dir) is
     * written once and every later invocation — bench iteration 2..n,

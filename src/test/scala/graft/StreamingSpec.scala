@@ -160,4 +160,13 @@ class StreamingSpec extends SparkSpec {
       } finally spark.conf.unset("graft.stream.filesPerTrigger")
     }
   }
+
+  test("replays declare the schema their layout files carry") {
+    // runStream hands readStream the events projection's analyzed schema
+    // instead of reading the files back; it must be the files' schema
+    import graft.queries.StreamRuns
+    def cols(t: org.apache.spark.sql.types.StructType) = t.map(f => f.name -> f.dataType)
+    val files = spark.read.parquet(StreamRuns.replayRoot(spark, sf0001) + "/data").schema
+    assert(cols(StreamRuns.replayEvents(spark, sf0001).schema) === cols(files))
+  }
 }
