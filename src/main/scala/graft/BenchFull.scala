@@ -31,14 +31,6 @@ object BenchFull {
       val missing = o -- queries.map(_._1).toSet
       require(missing.isEmpty, s"unknown query names: ${missing.mkString(",")}")
     }
-    // cached mode (GRAFT_PLAN_CACHE=1 or GraftTuning.planCache): time the
-    // PREPARED re-execution — plan/codegen built once untimed, iterations
-    // re-run the same RDD (graft.plans.PlanCache semantics, stated
-    // precisely in its scaladoc). Contract mode stays the default and is
-    // what regression compares and the primary anchor column read.
-    val cachedMode = sys.env.get("GRAFT_PLAN_CACHE").contains("1") ||
-      graft.plans.PlanCache.enabled(spark)
-    if (cachedMode) println("[bench] PLAN-CACHE MODE: timing prepared re-execution")
     val results = queries.map { case (name, fn) =>
       val qStart = System.currentTimeMillis()
       var success = true
@@ -51,25 +43,12 @@ object BenchFull {
       // this record are comparable.)
       val rowCount = try fn(spark, sfDir).count()
       catch { case e: Throwable => success = false; logFail(name, e); -1L }
-      // prepared once per query, first execute (full pipeline) untimed —
-      // the warm-up a prepared-statement workload pays once
-      val prepared = if (cachedMode && success) {
-        try {
-          val p = graft.plans.PlanCache.prepare(fn(spark, sfDir))
-          p.execute()
-          Some(p)
-        } catch { case e: Throwable => success = false; logFail(name, e); None }
-      } else None
       val iters = (1 to iterations).map { _ =>
         val env0 = EnvCounters.snap(spark)
         val t0 = System.nanoTime()
         val rows = try {
-          prepared match {
-            case Some(p) => p.execute()
-            case None =>
-              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-              rowCount
-          }
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          rowCount
         } catch { case e: Throwable => success = false; logFail(name, e); -1L }
         val ms = (System.nanoTime() - t0) / 1e6
         // environment counters per iteration (r9 verdict item 1)
@@ -79,10 +58,6 @@ object BenchFull {
       // context per query) — without it checkpoint blocks from ~800
       // earlier executions evict later queries' state to disk
       SparkEntry.restore(spark) // drop this query's execConf overrides
-      // cached mode: drop the prepared plan now — holding 204 prepared
-      // queries would pin their materialized exchange outputs (shuffle
-      // files + driver references) for the whole run
-      if (cachedMode) graft.plans.PlanCache.clear()
       GraftSession.releaseQueryState(spark)
       (name, qStart, success, iters)
     }
@@ -98,7 +73,7 @@ object BenchFull {
       try new java.io.File(sfDir).listFiles().map(_.lastModified()).max / 1000
       catch { case _: Throwable => 0L }
     val json = new StringBuilder
-    json ++= s"""{"context":{"benchmark_version":"${BuildInfo.version}","engine":"graft-spark","num_cpus":${Runtime.getRuntime.availableProcessors},"start_time":${System.currentTimeMillis() / 1000},"commit":"$commit","testdata_mtime":$fixtureMtime,"plan_cache":$cachedMode,"io":${EnvCounters.ioJson(spark)},"arguments":["$sfDir","iterations=$iterations"]},"queries":["""
+    json ++= s"""{"context":{"benchmark_version":"${BuildInfo.version}","engine":"graft-spark","num_cpus":${Runtime.getRuntime.availableProcessors},"start_time":${System.currentTimeMillis() / 1000},"commit":"$commit","testdata_mtime":$fixtureMtime,"io":${EnvCounters.ioJson(spark)},"arguments":["$sfDir","iterations=$iterations"]},"queries":["""
     json ++= results.map { case (name, qStart, success, iters) =>
       val arr = iters.map { case (ms, n, env) =>
         s"""{"elapsed":$ms,"row_count":$n,"env":$env}"""

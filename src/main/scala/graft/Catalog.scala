@@ -124,7 +124,7 @@ object Catalog {
       // broadcast build would have, and can never mis-fire on real data
       // (a 32 KB "fact" does not exist).
       val bytes = totalBytes(new java.io.File(path))
-      if (!inlineDisabled && bytes > 0 && bytes < SmallDimInlineBytes) {
+      if (bytes > 0 && bytes < SmallDimInlineBytes) {
         import scala.jdk.CollectionConverters._
         spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
       } else df
@@ -135,12 +135,6 @@ object Catalog {
     * region at every SF and replica) and nothing that grows with SF past
     * the smallest fixtures. */
   val SmallDimInlineBytes: Long = 32L << 10
-
-  /** Operational kill switch (GRAFT_NO_INLINE=1), mirroring
-    * GRAFT_NO_AUTOTUNE: all tables read as file scans — for A/B
-    * measurement and as the escape hatch if inlining ever misbehaves. */
-  private def inlineDisabled: Boolean =
-    sys.env.get("GRAFT_NO_INLINE").contains("1")
 
   private def totalBytes(f: java.io.File): Long =
     if (f.isDirectory)

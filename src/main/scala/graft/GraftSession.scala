@@ -55,21 +55,13 @@ case class GraftTuning(
       * so 64 MB stands. The genuinely degenerate cases are FACT-DERIVED
       * AGGREGATES whose post-filter estimates sneak under any ceiling —
       * those are fixed at the query level with shuffle_hash hints
-      * (q03/q18), not by shrinking the ceiling for true dimensions.
-      * SPARK_GRAFT_BROADCAST_MB overrides for future A/Bs. */
+      * (q03/q18), not by shrinking the ceiling for true dimensions. */
     broadcastThresholdBytes: Long = GraftSession.defaultBroadcastBytes,
     /** Max bytes per file-scan partition (reference: batch size analog at
       * the scan; governs scan task granularity at 100 TB). */
     maxPartitionBytes: Long = 128L << 20,
     /** Vectorized parquet reader batch rows (reference: batch_size). */
-    columnarBatchSize: Int = 4096,
-    /** Opt-in prepared-query reuse ([[graft.plans.PlanCache]]): repeated
-      * executions of a semantically identical query skip Catalyst,
-      * codegen source generation and (under AQE, for unchanged inputs)
-      * already-materialized exchanges. Off by default — the bench
-      * contract mode re-plans per iteration like the reference protocol;
-      * cached-mode numbers are reported alongside, never instead. */
-    planCache: Boolean = false)
+    columnarBatchSize: Int = 4096)
 
 /** Session construction for the graft engine.
   *
@@ -103,10 +95,8 @@ object GraftSession {
   /** Default parallelism for the local test harness. */
   def defaultCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
-  /** Default broadcast ceiling (see GraftTuning.broadcastThresholdBytes);
-    * SPARK_GRAFT_BROADCAST_MB overrides for A/B measurement. */
-  def defaultBroadcastBytes: Long =
-    sys.env.getOrElse("SPARK_GRAFT_BROADCAST_MB", "64").toLong << 20
+  /** Default broadcast ceiling (see GraftTuning.broadcastThresholdBytes). */
+  val defaultBroadcastBytes: Long = 64L << 20
 
   /** Shuffle/spill scratch directory. Prefer RAM-backed tmpfs when
     * present and big: this sandbox's kernel throttles page-cache
@@ -166,7 +156,6 @@ object GraftSession {
       // storm on VM kernels (measured here: q18 at 30x data 11 s vs 123 s),
       // and the copy itself is not the bottleneck for 32 MB-scale spills
       .config("spark.file.transferTo", "false")
-      .config("graft.plan.cache", t.planCache.toString)
       .config("spark.hadoop.fs.file.impl", classOf[graft.io.ForklessLocalFileSystem].getName)
       .config("spark.sql.streaming.checkpointFileManagerClass",
         classOf[graft.io.ForklessCheckpointFileManager].getName)
@@ -237,7 +226,8 @@ object GraftSession {
     * are dropped, while retained fits stay strongly referenced by their
     * cache. So an explicit GC at the query boundary frees exactly the
     * orphans and can never touch live state. clearCache() additionally
-    * drops plan-cache entries, whose lineage is intact (recompute-safe).
+    * drops `Dataset.cache()` entries, whose lineage is intact
+    * (recompute-safe).
     *
     * The GC is THRESHOLDED on storage-pool PRESSURE, not unconditional
     * and not on entry count: an unconditional full GC between all ~200
@@ -256,11 +246,12 @@ object GraftSession {
     * (Round-9 ruled OUT sub-threshold accumulation as a hazard class:
     * a 2× regression cluster on the 10×-replica documents-scan queries
     * initially looked like resident-block buildup under a never-firing
-    * trigger, but the SPARK_GRAFT_DEBUG_RELEASE boundary probe measured
-    * ≤ 62 MiB resident at every boundary of a heavy-prefix run — the
-    * real cause was the range-sort sampling double-execution fixed in
-    * TextOps. Do not re-add a bytes/count trigger without a boundary
-    * probe showing actual accumulation.)
+    * trigger, but a boundary probe measured ≤ 62 MiB resident at every
+    * boundary of a heavy-prefix run — the real cause was the range-sort
+    * sampling double-execution fixed in TextOps. Do not re-add a
+    * bytes/count trigger without a boundary measurement showing actual
+    * accumulation: perfbench's `storage.resident_mb_at_start` reports
+    * the storage pool's residency at each query boundary.)
     *
     * Caveat (advice r8): `System.gc()` is a NO-OP under
     * `-XX:+DisableExplicitGC` — the leak would silently return with the
@@ -286,9 +277,6 @@ object GraftSession {
     // see. Kept deliberately far above r8's count threshold of 64, whose
     // firing BETWEEN light queries was itself a measured 1.2-1.4x tax.
     val entries = spark.sparkContext.getPersistentRDDs.size
-    if (sys.env.contains("SPARK_GRAFT_DEBUG_RELEASE"))
-      System.err.println(f"[graft] releaseQueryState: ${usedBytes >> 20} MiB" +
-        f" resident (${usedFrac * 100}%.1f%% of pool), $entries entries")
     if (usedFrac > 0.5 || entries > 512) {
       val gcBeans = {
         import scala.jdk.CollectionConverters._

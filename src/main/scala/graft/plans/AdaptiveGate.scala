@@ -58,12 +58,6 @@ object AdaptiveGate {
     * value and adaptive state. */
   private val OrigKey = "graft.autotune.origPartitions"
 
-  /** Operational kill switch (GRAFT_NO_AUTOTUNE=1): run everything with
-    * the session's own conf — for A/B floor measurement and as the
-    * escape hatch if a plan's size estimate ever misleads the gate. */
-  private val disabled: Boolean =
-    sys.env.get("GRAFT_NO_AUTOTUNE").exists(_ == "1")
-
   /** Leaves of the analyzed plan AND of every (nested) subquery
     * expression plan. IN/EXISTS/scalar subqueries only become joins at
     * optimization, so `collectLeaves` on the analyzed plan alone misses
@@ -148,7 +142,6 @@ object AdaptiveGate {
     * Idempotent per execution; sequential callers (Bench/Verify run
     * queries one at a time) always see the conf their own plan chose. */
   def tune(spark: SparkSession, df: DataFrame): Unit = {
-    if (disabled) return
     val in = inputBytes(df)
     val conf = spark.conf
     if (in < SmallPlanBytes && !expands(df)) {
@@ -197,8 +190,8 @@ object AdaptiveGate {
     * its rounds genuinely want AQE. Restores exactly; nest-safe (plain
     * save/restore, independent of the [[tune]]/[[reset]] override). */
   def scopedLoop[T](spark: SparkSession, sizing: DataFrame)(body: => T): T = {
-    lazy val in = inputBytes(sizing)
-    if (disabled || in >= SmallPlanBytes) body
+    val in = inputBytes(sizing)
+    if (in >= SmallPlanBytes) body
     else {
       val conf = spark.conf
       val savedParts = conf.get("spark.sql.shuffle.partitions")

@@ -31,11 +31,6 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * have chosen for it anyway. */
 object OnePartitionSort extends Rule[LogicalPlan] {
 
-  /** Operational kill switch (GRAFT_NO_1PSORT=1), for A/B measurement and
-    * as the escape hatch — same pattern as GRAFT_NO_AUTOTUNE/NO_INLINE. */
-  private val disabled: Boolean =
-    sys.env.get("GRAFT_NO_1PSORT").contains("1")
-
   /** Plan-local smallness, independent of session conf: total leaf bytes
     * (subquery plans included — IN/EXISTS only become joins later) under
     * the gate's threshold, and no Generate anywhere. Optimizer-time leaf
@@ -48,8 +43,7 @@ object OnePartitionSort extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (disabled ||
-      conf.getConfString("graft.autotune.origPartitions", "").isEmpty ||
+    if (conf.getConfString("graft.autotune.origPartitions", "").isEmpty ||
       !smallPlan(plan)) plan
     else rewrite(plan)
 

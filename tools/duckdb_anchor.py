@@ -11,9 +11,8 @@ publishes no numbers, so this gives the bench table an external, honestly
 labeled reference point.
 
 usage: python3 tools/duckdb_anchor.py <oracle_sql.json> <sfDir> <bench.json>
-           [iters] [name-pattern] [cached_bench.json]
-outputs a markdown ratio table on stdout (plus a cached-mode column when a
-plan-cache bench artifact is supplied).
+           [iters] [name-pattern]
+outputs a markdown ratio table on stdout.
 """
 import json, sys, time, re
 import duckdb
@@ -34,8 +33,7 @@ assert true_median([1.0, 2.0, 4.0]) == 2.0
 assert true_median([1.0, 2.0, 4.0, 8.0]) == 3.0  # even count: avg of middle two
 
 
-def main(oracle_path, sfdir, bench_path, iters=3, pattern=r"^q\d\d",
-         cached_bench_path=None):
+def main(oracle_path, sfdir, bench_path, iters=3, pattern=r"^q\d\d"):
     oracle = json.load(open(oracle_path))
     tpch = {k: v for k, v in oracle.items() if re.match(pattern, k)}
     con = duckdb.connect()
@@ -60,16 +58,6 @@ def main(oracle_path, sfdir, bench_path, iters=3, pattern=r"^q\d\d",
             if q["success"]:
                 m = min(i["elapsed"] for i in q["iterations"])
                 graft_ms[q["query"]] = min(m, graft_ms.get(q["query"], m))
-    # optional second column: plan-cache mode (prepared re-execution —
-    # r12 verdict item 7; reported SIDE BY SIDE, never instead: contract
-    # mode matches the reference protocol, which re-plans per iteration)
-    cached_ms = {}
-    if cached_bench_path:
-        cb = json.load(open(cached_bench_path))
-        assert cb["context"].get("plan_cache"), (
-            f"{cached_bench_path} was not produced in plan-cache mode")
-        cached_ms = {q["query"]: min(i["elapsed"] for i in q["iterations"])
-                     for q in cb["queries"] if q["success"]}
 
     # GRAFT_DUCK_SAVE / GRAFT_DUCK_LOAD: persist / reuse the DuckDB
     # timings so the bracketing protocol's second invocation (after the
@@ -104,32 +92,19 @@ def main(oracle_path, sfdir, bench_path, iters=3, pattern=r"^q\d\d",
                 duck = min(duck, duck_prior[name])
         duck_measured[name] = duck
         g = graft_ms.get(name)
-        c = cached_ms.get(name)
-        rows.append((name, duck, g, (g / duck) if g else None,
-                     c, (c / duck) if c else None))
+        rows.append((name, duck, g, (g / duck) if g else None))
 
-    cached_cols = " graft cached ms | cached/duckdb |" if cached_ms else ""
     print("| query | duckdb ms (min of %d) | graft ms (min of bench iters) "
-          "| graft/duckdb |%s" % (iters, cached_cols))
-    print("|---|---|---|---|" + ("---|---|" if cached_ms else ""))
-    for name, duck, g, ratio, c, cratio in rows:
+          "| graft/duckdb |" % iters)
+    print("|---|---|---|---|")
+    for name, duck, g, ratio in rows:
         gs = f"{g:.0f}" if g is not None else "n/a"
         rs = f"{ratio:.2f}x" if ratio is not None else "n/a"
-        tail = ""
-        if cached_ms:
-            cs = f"{c:.0f}" if c is not None else "n/a"
-            crs = f"{cratio:.2f}x" if cratio is not None else "n/a"
-            tail = f" {cs} | {crs} |"
-        print(f"| {name} | {duck:.0f} | {gs} | {rs} |{tail}")
+        print(f"| {name} | {duck:.0f} | {gs} | {rs} |")
     ratios = sorted(r[3] for r in rows if r[3] is not None)
     if ratios:
         med = true_median(ratios)
         print(f"\nmedian graft/duckdb ratio: {med:.2f}x over {len(ratios)} queries")
-    cratios = sorted(r[5] for r in rows if r[5] is not None)
-    if cratios:
-        print(f"median cached/duckdb ratio: {true_median(cratios):.2f}x over "
-              f"{len(cratios)} queries (prepared re-execution; see "
-              "graft.plans.PlanCache scaladoc for exactly what is reused)")
     if "," in bench_path:
         duck_note = (" duckdb ms = per-query min over two timing slots "
                      "(center-of-interleave + table build)."
@@ -145,5 +120,4 @@ def main(oracle_path, sfdir, bench_path, iters=3, pattern=r"^q\d\d",
 if __name__ == "__main__":
     it = int(sys.argv[4]) if len(sys.argv) > 4 else 3
     pat = sys.argv[5] if len(sys.argv) > 5 else r"^q\d\d"
-    cached = sys.argv[6] if len(sys.argv) > 6 else None
-    main(sys.argv[1], sys.argv[2], sys.argv[3], it, pat, cached)
+    main(sys.argv[1], sys.argv[2], sys.argv[3], it, pat)

@@ -93,13 +93,6 @@ python3 tools/merge_bench.py /tmp/${TAG}_sf1x_passA.json \
   /tmp/${TAG}_sf1x_passB.json bench_results/${TAG}_sf1x.json \
   "" bench_results/${TAG}_sf1x_compare.md \
   /tmp/${TAG}_sf1x_prevA.json /tmp/${TAG}_sf1x_prevB.json
-echo "=== [3b/7] BenchFull @ 10x replica in PLAN-CACHE mode (prepared re-execution column)"
-# r12 verdict item 7: the floor-family residual is per-execution codegen +
-# job scheduling; the prepared-query cache is the engine lever. Reported
-# as a SIDE column in the sf1x anchor, never replacing contract mode.
-GRAFT_PLAN_CACHE=1 sbt -batch \
-  "runMain graft.BenchFull $REP bench_results/${TAG}_sf1x_cached.json 3" \
-  > /tmp/${TAG}_bench1xcached.log 2>&1
 echo "=== [4/7] ClusterCheck (full registry, 2 executor JVMs) @ sf0.01"
 SPARK_SCALA_VERSION=2.13 sbt -batch "runMain graft.ClusterCheck $SF01 $COUT" \
   > /tmp/${TAG}_cluster.log 2>&1
@@ -140,7 +133,6 @@ GRAFT_DUCK_MIN=/tmp/${TAG}_duck01_q.json \
 GRAFT_DUCK_MIN=/tmp/${TAG}_anchor_duck.json \
   python3 tools/duckdb_anchor.py "$VOUT/oracle_sql.json" "$REP" \
   /tmp/${TAG}_sf1x_passA.json,/tmp/${TAG}_sf1x_passB.json 3 '^q\d\d' \
-  bench_results/${TAG}_sf1x_cached.json \
   > bench_results/${TAG}_duckdb_anchor_sf1x.md
 # extension-layer anchor: every non-TPC-H oracle query at sf0.1 —
 # same-window, same pattern as above
