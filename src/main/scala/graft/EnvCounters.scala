@@ -4,6 +4,7 @@ import java.lang.management.ManagementFactory
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.LongAdder
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -28,7 +29,12 @@ import org.apache.spark.sql.SparkSession
   *    SF1 short-query floor signature), jobs overlapping ⇒ not;
   *  - `store_mb0` — storage-pool occupancy at iteration START (the r8
   *    orphaned-checkpoint hazard made late-suite queries 5x slower; this
-  *    pins whether the adjudicated run entered a query pre-loaded).
+  *    pins whether the adjudicated run entered a query pre-loaded);
+  *  - `codegen_compiles` — generated classes Janino compiled during the
+  *    iteration (Spark's `CodegenMetrics` compile count, JVM-wide). A warm
+  *    iteration should read 0: anything else is a codegen-cache miss,
+  *    such as a per-session classloader or an overfull cache, paid again
+  *    on every run.
   *
   * Once per run, [[ioJson]] records the local I/O facts that decide
   * whether writing a local file forks processes (see [[graft.io.LocalIO]]).
@@ -83,7 +89,7 @@ object EnvCounters {
   /** Cumulative counter snapshot (all fields monotone). */
   final case class Snap(
       gcMs: Long, jitMs: Long, taskGcMs: Long, runMs: Long, schedMs: Long,
-      tasks: Long, jobs: Long, jobMs: Long, storeMb: Long)
+      tasks: Long, jobs: Long, jobMs: Long, storeMb: Long, compiles: Long)
 
   private def gcBeans = {
     import scala.jdk.CollectionConverters._
@@ -102,7 +108,8 @@ object EnvCounters {
       .map(_.getTotalCompilationTime).getOrElse(0L),
     taskGcMs = taskGcMs.sum, runMs = runMs.sum, schedMs = schedMs.sum,
     tasks = tasks.sum, jobs = jobs.sum, jobMs = jobMs.sum,
-    storeMb = storageUsedMb(spark))
+    storeMb = storageUsedMb(spark),
+    compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
 
   /** Post-body snapshot: quiesce the async listener bus first (its drain
     * API is private[spark]) by polling the task counter until it holds
@@ -143,5 +150,6 @@ object EnvCounters {
       s""""tasks":${after.tasks - before.tasks},""" +
       s""""jobs":${after.jobs - before.jobs},""" +
       s""""job_ms":${after.jobMs - before.jobMs},""" +
+      s""""codegen_compiles":${after.compiles - before.compiles},""" +
       s""""store_mb0":${before.storeMb}}"""
 }

@@ -89,6 +89,20 @@ case class GraftTuning(
   *    rename(2) is atomic, and keeps Spark's default FileContext manager
   *    for every other scheme (HDFS, object stores), whose atomic rename
   *    those stores rely on.
+  *  - Session artifact isolation off. Spark keys its generated-code
+  *    cache (`CodeGenerator.cache`) on the thread's context classloader
+  *    as well as the source. With isolation on, each session gets its
+  *    own classloader, and `StreamExecution` runs every stream query in
+  *    a clone of its session, so every streaming replay recompiled the
+  *    same generated classes and ran them cold in the JIT (a warm
+  *    `s_dedup_keys` compiled the same 9 classes on every run, and its
+  *    tasks ran 1.5–1.9× longer at sf0.01). Batch queries run in the
+  *    long-lived session and were never affected. Isolation exists to
+  *    keep one session's added jars, files and REPL classes from
+  *    another's; graft adds none (no `addArtifact`, `addJar` or
+  *    `addFile`), so it buys nothing here. A `newSession()` per
+  *    execution relies on this too: with isolation on, every query would
+  *    recompile on every run.
   */
 object GraftSession {
 
@@ -159,6 +173,7 @@ object GraftSession {
       .config("spark.hadoop.fs.file.impl", classOf[graft.io.ForklessLocalFileSystem].getName)
       .config("spark.sql.streaming.checkpointFileManagerClass",
         classOf[graft.io.ForklessCheckpointFileManager].getName)
+      .config("spark.sql.artifact.isolation.enabled", "false")
     val b2 = scratchDir.fold(b1)(d => b1.config("spark.local.dir", d))
     // in.memory.threshold moves rows into the UnsafeExternalSorter once
     // exceeded; spill.threshold then forces that sorter to disk — both are

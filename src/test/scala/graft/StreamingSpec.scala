@@ -161,6 +161,23 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("a replay's second run compiles no generated code") {
+    // each stream run executes in a clone of the session; its generated
+    // classes must come from the codegen cache on every run after the
+    // first (a per-session classloader made every run recompile them).
+    // The compile counter is JVM-wide: suites run one at a time in the
+    // forked test JVM, so nothing else compiles in between.
+    val replays = SparkEntry.queries.keys.filter(_.startsWith("s_")).toSeq.sorted
+    assert(replays.size === 8, s"replays: $replays")
+    def compiles(name: String): Long = {
+      val before = EnvCounters.snap(spark).compiles
+      SparkEntry.queries(name)(spark, sf0001).collect()
+      EnvCounters.snap(spark).compiles - before
+    }
+    val warm = replays.map { n => compiles(n); n -> compiles(n) }
+    assert(warm.forall(_._2 == 0L), s"classes compiled on a warm run: $warm")
+  }
+
   test("replays declare the schema their layout files carry") {
     // runStream hands readStream the events projection's analyzed schema
     // instead of reading the files back; it must be the files' schema

@@ -16,4 +16,7 @@ echo "[gate] DuckDB oracle compare"
 RES="$(python3 tools/check_oracles.py "$OUT" "$SF")"
 echo "$RES" | grep -E "^FAIL|pass / " || true
 echo "$RES" | grep -q " 0 fail" || { echo "[gate] RED"; exit 1; }
-echo "[gate] GREEN $(git rev-parse --short HEAD 2>/dev/null || true) $(date -u +%FT%TZ)"
+# a tree with uncommitted changes is not the HEAD commit: say so
+REV="$(git rev-parse --short HEAD 2>/dev/null || true)"
+[ -n "$(git status --porcelain 2>/dev/null)" ] && REV="$REV-dirty"
+echo "[gate] GREEN $REV $(date -u +%FT%TZ)"
