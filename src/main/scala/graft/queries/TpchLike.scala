@@ -135,28 +135,26 @@ object TpchLike {
       val c = Catalog.table(spark, dir, "customer")
       val o = Catalog.table(spark, dir, "orders")
       val l = Catalog.table(spark, dir, "lineitem")
-      // aggregate-below-join: the group key is l_orderkey and the
-      // customer/date predicates are order-level, so per-order revenue can
-      // be summed BEFORE any join (map-side combine on the
-      // orderkey-clustered lineitem files) — the join then carries one
-      // narrow row per qualifying order, and AQE can broadcast the
-      // customer-filtered orders side instead of sort-merging raw lineitem
-      val rev = l.filter(col("l_shipdate") > d("1998-03-15"))
-        .groupBy(col("l_orderkey"))
+      // join first, aggregate after (the shape of the reference's q3.sql):
+      // about a tenth of orders qualify, so summing every shipped lineitem
+      // per order before the join would build ~9x more groups than the
+      // join keeps. Joining first drops the lineitems of other orders at
+      // the probe, and the aggregate groups only joined rows.
+      // The order side is a left-semi join, not an inner join: c_custkey
+      // is customer's key, so both return the same orders, but Spark
+      // sizes a semi join like its left scan and an inner join as the
+      // product of its inputs. With a scan-sized estimate the session's
+      // broadcast ceiling decides the lineitem join with no hint: the
+      // order slice broadcasts while it is under the ceiling and the join
+      // plans as a shuffle join above it.
+      val ord = o.filter(col("o_orderdate") < d("1998-03-15"))
+        .join(c.filter(col("c_mktsegment") === "BUILDING"),
+          col("o_custkey") === col("c_custkey"), "left_semi")
+        .select(col("o_orderkey"), col("o_orderdate"))
+      l.filter(col("l_shipdate") > d("1998-03-15"))
+        .join(ord, col("l_orderkey") === col("o_orderkey"))
+        .groupBy(col("l_orderkey"), col("o_orderdate"))
         .agg(dsum(disc(col("l_extendedprice"), col("l_discount"))).as("revenue"))
-      // rev is FACT-derived (one row per order — cardinality ∝ lineitem),
-      // so it must never be the broadcast build side: its static size
-      // estimate sits under the broadcast threshold at bench SFs, and the
-      // planner then builds a millions-of-rows HashedRelation single-
-      // threaded on the driver (measured at SF1: ~500 ms of a 950 ms
-      // query, r10 JobProbe) — a shape that only gets worse with scale.
-      // The shuffle_hash hint keeps the join co-partitioned with rev's
-      // own aggregation exchange (only the narrow orders side moves) and
-      // builds per-partition in parallel.
-      c.filter(col("c_mktsegment") === "BUILDING")
-        .join(o, col("c_custkey") === col("o_custkey"))
-        .filter(col("o_orderdate") < d("1998-03-15"))
-        .join(rev.hint("shuffle_hash"), col("l_orderkey") === col("o_orderkey"))
         .select(col("l_orderkey"), col("revenue"),
           col("o_orderdate").cast(DateType).as("o_orderdate"))
         .orderBy(col("revenue").desc, col("l_orderkey"))
@@ -465,7 +463,7 @@ object TpchLike {
       val l = Catalog.table(spark, dir, "lineitem")
       val n = Catalog.table(spark, dir, "nation")
       // fact-first (see q5): returned lineitems stream against the
-      // 3-month orders slice — then aggregate-below-join (the q03/q13
+      // 3-month orders slice — then aggregate-below-join (the q13
       // trick): revenue is keyed by custkey alone, and the grouped
       // customer attributes are functionally determined by it, so the
       // per-custkey sum happens BEFORE any dimension join. The dim join
@@ -549,7 +547,7 @@ object TpchLike {
       // SFs and the planner then builds a ~0.9M-row HashedRelation
       // single-threaded on the driver (r11 JobProbe at SF1: ~1.0 s of a
       // 1.4 s query sat between the broadcast-build job and the probe
-      // job). Same rule as q03/q18: fact-cardinality build sides take
+      // job). Same rule as q18: fact-cardinality build sides take
       // shuffle_hash — both sides hash on orderkey and the build runs
       // per-partition in parallel; at 100 TB this is the only plan that
       // works at all (the slice never fits one machine).
@@ -790,7 +788,7 @@ object TpchLike {
         .groupBy(col("l_orderkey").as("bk"))
         .agg(dsum(col("l_quantity")).as("sum_qty"))
         .filter(col("sum_qty") > 150)
-      // same fact-derived-aggregate rule as q03: bigOrders is one row per
+      // fact-derived-aggregate rule: bigOrders is one row per
       // qualifying ORDER (293k at SF1 — measured), so its post-filter size
       // estimate tempts the planner into a driver-side broadcast build;
       // shuffle_hash keeps the join co-partitioned with the aggregation
@@ -987,7 +985,7 @@ object TpchLike {
         // ~300k-row LongToUnsafeRowMap single-threaded on the driver
         // (r11 JobProbe stacks caught the build filling the dead window
         // between the collect jobs and the main job). Same rule as
-        // q03/q12/q18: fact-cardinality build sides take shuffle_hash.
+        // q12/q18: fact-cardinality build sides take shuffle_hash.
         .join(o.filter(col("o_orderpriority") === "1-URGENT").hint("shuffle_hash"),
           col("o_custkey") === col("c_custkey"), "left_anti")
         .groupBy(col("cntrycode"))

@@ -246,6 +246,51 @@ class PlanSpec extends SparkSpec {
       s"q04 grew a fact-side aggregate below the probe join:\n${aggBelowJoin.mkString("\n")}")
   }
 
+  test("q03: lineitem probes the qualifying orders, unhinted, at any ceiling") {
+    // lineitem joins the customer-qualified order slice FIRST and only
+    // joined rows are summed. The old form summed every shipped lineitem
+    // per order below a shuffle_hash-hinted join; that aggregate
+    // reappearing below the join fails the first pin. The order slice
+    // is a semi join so its estimate stays scan-sized: the
+    // broadcast ceiling alone picks the strategy, lineitem (the fact
+    // side) is never the build side, and past the ceiling (simulated by
+    // disabling the threshold) the join demotes to a shuffle join with
+    // the same rows.
+    def shape(): (Vector[String], Seq[Seq[Any]]) = {
+      val df = q("q03_topk_revenue")
+      val lines = PlanDescriber.simpleString(df).linesIterator.toVector
+      (lines, df.collect().map(_.toSeq).toSeq)
+    }
+    def depth(l: String) = l.indexWhere(ch => !" :+-".contains(ch))
+    def isLineitemScan(l: String) = l.contains("Location") && l.contains("lineitem.parquet")
+    val (lines, rows) = shape()
+    val plan = lines.mkString("\n").take(2500)
+    val joinIdx = lines.indexWhere(l => l.contains("HashJoin") || l.contains("SortMergeJoin"))
+    assert(joinIdx >= 0, s"q03 plan lost its lineitem join:\n$plan")
+    assert(lines.drop(joinIdx + 1).exists(isLineitemScan),
+      s"the top join does not read lineitem:\n$plan")
+    val aggBelowJoin = lines.drop(joinIdx + 1).filter(_.contains("Aggregate"))
+    assert(aggBelowJoin.isEmpty,
+      s"q03 aggregates below the lineitem join:\n${aggBelowJoin.mkString("\n")}")
+    lines.zipWithIndex.filter(_._1.contains("BroadcastExchange")).foreach { case (b, i) =>
+      val subtree = lines.drop(i + 1).takeWhile(l => depth(l) > depth(b))
+      assert(!subtree.exists(isLineitemScan), s"q03 broadcasts the lineitem side:\n$plan")
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(key)
+    val (capped, cappedRows) =
+      try {
+        spark.conf.set(key, "-1")
+        shape()
+      } finally spark.conf.set(key, saved)
+    val cappedPlan = capped.mkString("\n").take(2500)
+    assert(!capped.exists(_.contains("BroadcastHashJoin")),
+      s"q03 still broadcasts past the ceiling:\n$cappedPlan")
+    assert(capped.exists(l => l.contains("SortMergeJoin") || l.contains("ShuffledHashJoin")),
+      s"q03 did not demote to a shuffle join:\n$cappedPlan")
+    assert(rows.size == 10 && cappedRows == rows, "the join strategy changed q03's rows")
+  }
+
   test("q17: one lineitem scan, window avg, no per-partkey agg broadcast") {
     // the r11 rewrite computes the correlated per-partkey avg as a
     // window over the brand slice: exactly ONE lineitem scan (the old
