@@ -56,7 +56,8 @@ object PlanDescriber {
       broadcastJoins = n("BroadcastHashJoin") + n("BroadcastNestedLoopJoin"),
       sortMergeJoins = n("SortMergeJoin"),
       hashAggregates = n("HashAggregate"),
-      scans = n("Scan parquet") + n("FileScan parquet"),
+      // also matches inside "FileScan parquet": one count per scan
+      scans = n("Scan parquet"),
       // codegen'd operators print as "*(n) Op" in plan strings
       wholeStageCodegen = s.contains("WholeStageCodegen") ||
         "\\*\\(\\d+\\) ".r.findFirstIn(s).isDefined)

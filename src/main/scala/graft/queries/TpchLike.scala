@@ -469,8 +469,10 @@ object TpchLike {
       // per-custkey sum happens BEFORE any dimension join. The dim join
       // then carries one narrow row per returning customer instead of
       // one per returned lineitem, and customer co-partitions against
-      // the aggregation's own custkey exchange (shuffle_hash — the
-      // per-custkey frame is fact-derived, never a broadcast build).
+      // the aggregation's own custkey exchange. Spark sizes the
+      // per-custkey frame as a product of its join inputs, so it never
+      // broadcasts anyway; the shuffle_hash hint only stops customer
+      // (0.7 MB at x4) from broadcasting.
       val revByCust = l.filter(col("l_returnflag") === "R")
         .join(o.filter(col("o_orderdate") >= d("1997-10-01") &&
             col("o_orderdate") < d("1998-01-01")),

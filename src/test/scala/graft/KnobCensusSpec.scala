@@ -11,7 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * somewhere. A new knob therefore has to justify itself here, and a
   * knob whose last reader is deleted leaves the list with it. Switches
   * that exist only to turn a mechanism off for an A/B do not belong:
-  * an ablation compares the parent commit with the change instead. */
+  * an ablation compares the parent commit with the change instead.
+  * Entry points get the same census: every object under `src/main` that
+  * defines `main` is listed with a one-line reason, so a one-off probe
+  * main has to justify itself the way a knob does. */
 class KnobCensusSpec extends AnyFunSuite {
 
   private val allowedEnv: Map[String, String] = Map(
@@ -31,6 +34,19 @@ class KnobCensusSpec extends AnyFunSuite {
       "t_simhash_neardup's size-gate signal, read back by its execution-regime conf",
     "graft.stream.filesPerTrigger" ->
       "StreamingSpec's batching-invariance parameter for the streaming replays")
+
+  private val allowedMains: Map[String, String] = Map(
+    "graft.Bench" -> "driver bench contract: one JSON line over the registry",
+    "graft.BenchFull" -> "per-query iteration timings of tools/round_artifacts.sh",
+    "graft.Verify" -> "correctness dump for the DuckDB oracle compare (tools/gate.sh)",
+    "graft.OracleDump" -> "oracle SQL without running queries (tools/round_artifacts.sh)",
+    "graft.ClusterCheck" -> "the registry across two executor JVMs (tools/round_artifacts.sh)",
+    "graft.FaultCheck" -> "executor-kill recovery proof (tools/round_artifacts.sh)",
+    "graft.FuzzRunner" -> "generated-SQL differential against DuckDB (tools/fuzz.sh)",
+    "graft.ScaleUp" -> "key-shifted replicas for perfbench and the 10x rung",
+    "graft.Plans" -> "regenerates PLANS.md",
+    "graft.PlanDump" -> "raw formatted plans for before/after plan diffs",
+    "graft.ConfProbe" -> "same-JVM session-conf A/B over registry queries")
 
   /** (file:line, line) of every non-comment line of main Scala source. */
   private lazy val codeLines: Seq[(String, String)] = {
@@ -65,6 +81,22 @@ class KnobCensusSpec extends AnyFunSuite {
       }
     }
 
+  private val PackageDecl = """^\s*package\s+([\w.]+)""".r
+  private val ObjectDecl = """\bobject\s+(\w+)""".r
+  private val MainDef = """\bdef\s+main\s*\(""".r
+
+  /** Qualified name of each object whose body defines `main`: the
+    * package and object declared last before the definition. */
+  private lazy val mains: Set[String] = {
+    var pkg = ""
+    var obj = ""
+    codeLines.flatMap { case (_, line) =>
+      PackageDecl.findFirstMatchIn(line).foreach(m => pkg = m.group(1))
+      ObjectDecl.findFirstMatchIn(line).foreach(m => obj = m.group(1))
+      MainDef.findFirstIn(line).map(_ => s"$pkg.$obj")
+    }.toSet
+  }
+
   private lazy val confKeys: Set[String] =
     codeLines.flatMap { case (_, line) =>
       ConfKey.findAllMatchIn(line).map(_.group(1))
@@ -90,5 +122,13 @@ class KnobCensusSpec extends AnyFunSuite {
       s"conf keys named but not allowed (add a reason or delete the key): $unlisted")
     val stale = allowedConf.keySet -- confKeys
     assert(stale.isEmpty, s"allow-listed conf keys no longer named: $stale")
+  }
+
+  test("every main object is on the allow-list") {
+    val unlisted = mains -- allowedMains.keySet
+    assert(unlisted.isEmpty,
+      s"main objects not allowed (add a reason or delete the main): $unlisted")
+    val stale = allowedMains.keySet -- mains
+    assert(stale.isEmpty, s"allow-listed main objects no longer defined: $stale")
   }
 }

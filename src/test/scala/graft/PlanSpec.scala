@@ -30,6 +30,11 @@ class PlanSpec extends SparkSpec {
     assert(readSchema.contains("l_returnflag"), "scan misses needed column")
   }
 
+  test("summary counts each parquet scan once") {
+    assert(PlanDescriber.summary(q("q01_pricing_summary")).scans === 1)
+    assert(PlanDescriber.summary(q("q03_topk_revenue")).scans === 2)
+  }
+
   test("q05: small dimensions join via broadcast, not shuffle") {
     assert(PlanDescriber.broadcasts(q("q05_local_supplier_volume")) >= 2,
       "nation/region should broadcast")

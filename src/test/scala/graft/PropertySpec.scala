@@ -17,15 +17,6 @@ object PropertySpec extends Properties("graft.kernels") {
         whole == parts
     }
 
-  property("GraftSql splitter loses no statements") =
-    forAll(Gen.nonEmptyListOf(
-      Gen.oneOf(Gen.alphaNumStr.map(s => s"SELECT $s"),
-        Gen.alphaNumStr.map(s => s"SELECT 'a;$s'"),
-        Gen.const("SELECT 'it''s; quoted'")))) { stmts =>
-      GraftSql.splitStatements(stmts.mkString(";")) ==
-        stmts.map(_.trim).filter(_.nonEmpty)
-    }
-
   property("KMin merge is commutative, bounded, equals model") =
     forAll(Gen.listOf(Gen.chooseNum(Long.MinValue, Long.MaxValue)),
       Gen.listOf(Gen.chooseNum(Long.MinValue, Long.MaxValue))) {

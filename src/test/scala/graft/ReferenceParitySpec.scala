@@ -1,6 +1,7 @@
 package graft
 
 import graft.plans.Int64List
+import org.apache.spark.SparkException
 import org.apache.spark.sql.functions._
 
 /** Replicas of the reference's own integration tests (FIXTURES.md §§2-4),
@@ -92,5 +93,20 @@ class ReferenceParitySpec extends SparkSpec {
       .groupBy(col("c0")).agg(countDistinct(col("p")).as("nparts"))
       .agg(max(col("nparts"))).head.getLong(0)
     assert(copies === 1L)
+  }
+
+  test("executor-side exception's root message reaches the driver") {
+    // ≡ tests/error_propagation.rs:48-66: one of 8 partitions fails in user
+    // code, and the driver's exception still carries the root message
+    val boom = udf((i: Long) => {
+      if (i == 7) throw new IllegalStateException("graft-test-boom-7")
+      i
+    })
+    val e = intercept[SparkException] {
+      spark.range(0, 16, 1, 8).select(boom(col("id"))).collect()
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(c => Option(c.getMessage).exists(_.contains("graft-test-boom-7"))),
+      s"root message lost: ${chain.map(_.getMessage).mkString(" <- ")}")
   }
 }

@@ -1,42 +1,10 @@
 package graft
 
-import graft.plans.Partitioning
 import org.apache.spark.sql.functions._
 
-/** SQL script entry path + explicit partitioning control. */
+/** SQL entry path: statements through `spark.sql`, over the session's
+  * temp views and parquet warehouse. */
 class SqlSpec extends SparkSpec {
-
-  test("splitStatements is quote-aware") {
-    assert(GraftSql.splitStatements("SELECT 1; SELECT 2;") ===
-      Seq("SELECT 1", "SELECT 2"))
-    assert(GraftSql.splitStatements("SELECT 'a;b'; SELECT ';'") ===
-      Seq("SELECT 'a;b'", "SELECT ';'"))
-    assert(GraftSql.splitStatements("SELECT 'it''s; fine'; SELECT 3") ===
-      Seq("SELECT 'it''s; fine'", "SELECT 3"))
-  }
-
-  test("splitStatements is comment-aware (';' in comments does not split)") {
-    assert(GraftSql.splitStatements("SELECT 1 -- no; split here\n; SELECT 2") ===
-      Seq("SELECT 1 -- no; split here", "SELECT 2"))
-    assert(GraftSql.splitStatements("SELECT /* a; b */ 1; SELECT 2") ===
-      Seq("SELECT /* a; b */ 1", "SELECT 2"))
-    assert(GraftSql.splitStatements("SELECT /* x /* ner;ted */ y; */ 1; SELECT 2") ===
-      Seq("SELECT /* x /* ner;ted */ y; */ 1", "SELECT 2"))
-    // a quoted '--' is NOT a comment; a commented quote does not open a string
-    assert(GraftSql.splitStatements("SELECT '--'; SELECT 2") ===
-      Seq("SELECT '--'", "SELECT 2"))
-    assert(GraftSql.splitStatements("SELECT 1 -- don't\n; SELECT 2") ===
-      Seq("SELECT 1 -- don't", "SELECT 2"))
-    // comment-only segments are dropped, not fed to the parser
-    assert(GraftSql.splitStatements("SELECT 1;\n-- done") === Seq("SELECT 1"))
-    assert(GraftSql.splitStatements("/* header */; SELECT 1; /* trailer */") ===
-      Seq("SELECT 1"))
-    // and a commented script still runs end-to-end through Spark
-    val out = GraftSql.runScript(spark,
-      "-- header comment; with semicolon\nSELECT 1 AS a; SELECT 2 AS b /* tail; */")
-    assert(out.head.getInt(0) === 2)
-    assert(GraftSql.runScript(spark, "SELECT 3 AS c;\n-- done").head.getInt(0) === 3)
-  }
 
   test("q15-style 3-statement view flow runs end-to-end") {
     Catalog.registerAll(spark, sf0001)
@@ -46,15 +14,16 @@ class SqlSpec extends SparkSpec {
       SELECT s_suppkey, n FROM supplier JOIN rev_t ON s_suppkey = l_suppkey
         WHERE n = (SELECT MAX(n) FROM rev_t) ORDER BY s_suppkey;
       DROP VIEW rev_t"""
-    val out = GraftSql.runScript(spark, script).collect()
-    assert(out.nonEmpty)
+    val Array(create, select, drop) = script.split(";")
+    spark.sql(create)
+    assert(spark.sql(select).collect().nonEmpty)
+    spark.sql(drop)
     assert(intercept[Exception](spark.table("rev_t")).getMessage.contains("rev_t"))
   }
 
   test("CTAS + INSERT INTO flow through the script path (DDL/DML surface)") {
     // the warehouse write path: CREATE TABLE AS SELECT materializes a
-    // parquet-backed managed table, INSERT INTO appends — both through
-    // the same multi-statement script entry as the query path
+    // parquet-backed managed table, INSERT INTO appends
     Catalog.registerAll(spark, sf0001)
     spark.sql("DROP TABLE IF EXISTS ctas_nation")
     val script = """
@@ -63,7 +32,9 @@ class SqlSpec extends SparkSpec {
       INSERT INTO ctas_nation
         SELECT n_nationkey, n_name FROM nation WHERE n_nationkey >= 10;
       SELECT COUNT(*) AS n FROM ctas_nation"""
-    val out = GraftSql.runScript(spark, script).head.getLong(0)
+    val stmts = script.split(";")
+    stmts.init.foreach(spark.sql)
+    val out = spark.sql(stmts.last).head.getLong(0)
     assert(out === Catalog.table(spark, sf0001, "nation").count())
     // appended rows are readable with full fidelity, not just countable
     assert(spark.table("ctas_nation").orderBy("n_nationkey")
@@ -119,15 +90,5 @@ class SqlSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     val got = df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got === expect)
-  }
-
-  test("explicit hash/round-robin/range repartitioning takes effect") {
-    val l = Catalog.table(spark, sf0001, "lineitem")
-    assert(Partitioning.numPartitions(Partitioning.roundRobin(l, 7)) === 7)
-    val hashed = Partitioning.hash(l, 5, "l_orderkey")
-    assert(Partitioning.numPartitions(hashed) === 5)
-    assert(Partitioning.describe(hashed).toLowerCase.contains("hashpartitioning"))
-    val ranged = Partitioning.byRange(l, 3, col("l_orderkey"))
-    assert(Partitioning.numPartitions(ranged) === 3)
   }
 }
