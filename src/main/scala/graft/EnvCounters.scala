@@ -7,6 +7,7 @@ import java.util.concurrent.atomic.LongAdder
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.GraftBridge
 
 /** Per-iteration ENVIRONMENT counters for the bench harnesses (r9
   * verdict item 1): the adjudicating bench runs in an environment this
@@ -42,14 +43,23 @@ import org.apache.spark.sql.SparkSession
   * (Reference analog: benchmarks/src/util/run.rs:93-132 — the results
   * file records what the environment WAS, not just the number.)
   *
-  * The listener is installed once per JVM and counters are cumulative;
-  * an iteration reads start/stop snapshots, so concurrent measured
-  * bodies would fold together — the bench harnesses are sequential by
-  * construction.
+  * The same listener also sums each task's shuffle write and read,
+  * spill and input bytes and records, which [[measure]] reports for one
+  * body: the measured twin of [[graft.plans.PlanDescriber]]'s structural
+  * pins (MetricsSpec asserts a two-phase aggregate shuffles a tiny
+  * fraction of the records it scans).
+  *
+  * The listener is installed once per application and counters are
+  * cumulative; a measurement reads start/stop snapshots, so concurrent
+  * measured bodies would fold together — the bench harnesses and the
+  * specs are sequential by construction. Spark posts listener events
+  * asynchronously, so every post-body read drains the listener bus first.
   */
 object EnvCounters {
 
-  private val taskGcMs, runMs, schedMs, tasks, jobs, jobMs = new LongAdder
+  private val tasks, jobs, jobMs, taskGcMs, runMs, schedMs,
+    shuffleWriteBytes, shuffleWriteRecords, shuffleReadBytes,
+    shuffleReadRecords, spillBytes, inputBytes, inputRecords = new LongAdder
   private val jobStartMs = new ConcurrentHashMap[Int, java.lang.Long]()
   // keyed by applicationId, not a boolean: a stopped-and-rebuilt context
   // in the same JVM must get the listener RE-attached, or every task/job
@@ -66,6 +76,13 @@ object EnvCounters {
         // the UI's definition: wall not accounted to run/(de)serialization
         schedMs.add(math.max(0L, e.taskInfo.duration - m.executorRunTime -
           m.executorDeserializeTime - m.resultSerializationTime))
+        shuffleWriteBytes.add(m.shuffleWriteMetrics.bytesWritten)
+        shuffleWriteRecords.add(m.shuffleWriteMetrics.recordsWritten)
+        shuffleReadBytes.add(m.shuffleReadMetrics.totalBytesRead)
+        shuffleReadRecords.add(m.shuffleReadMetrics.recordsRead)
+        spillBytes.add(m.memoryBytesSpilled + m.diskBytesSpilled)
+        inputBytes.add(m.inputMetrics.bytesRead)
+        inputRecords.add(m.inputMetrics.recordsRead)
       }
       tasks.increment()
     }
@@ -86,10 +103,33 @@ object EnvCounters {
     }
   }
 
-  /** Cumulative counter snapshot (all fields monotone). */
+  /** Task and job totals from the listener: cumulative in a [[Snap]],
+    * per body once two are subtracted. */
+  final case class RunMetrics(
+      tasks: Long, jobs: Long, jobMs: Long,
+      taskGcMs: Long, runMs: Long, schedMs: Long,
+      shuffleWriteBytes: Long, shuffleWriteRecords: Long,
+      shuffleReadBytes: Long, shuffleReadRecords: Long,
+      spillBytes: Long, inputBytes: Long, inputRecords: Long) {
+    def -(o: RunMetrics): RunMetrics = RunMetrics(
+      tasks - o.tasks, jobs - o.jobs, jobMs - o.jobMs,
+      taskGcMs - o.taskGcMs, runMs - o.runMs, schedMs - o.schedMs,
+      shuffleWriteBytes - o.shuffleWriteBytes,
+      shuffleWriteRecords - o.shuffleWriteRecords,
+      shuffleReadBytes - o.shuffleReadBytes,
+      shuffleReadRecords - o.shuffleReadRecords,
+      spillBytes - o.spillBytes, inputBytes - o.inputBytes,
+      inputRecords - o.inputRecords)
+  }
+
+  private def runTotals = RunMetrics(
+    tasks.sum, jobs.sum, jobMs.sum, taskGcMs.sum, runMs.sum, schedMs.sum,
+    shuffleWriteBytes.sum, shuffleWriteRecords.sum, shuffleReadBytes.sum,
+    shuffleReadRecords.sum, spillBytes.sum, inputBytes.sum, inputRecords.sum)
+
+  /** Cumulative counter snapshot (all fields monotone but `storeMb`). */
   final case class Snap(
-      gcMs: Long, jitMs: Long, taskGcMs: Long, runMs: Long, schedMs: Long,
-      tasks: Long, jobs: Long, jobMs: Long, storeMb: Long, compiles: Long)
+      gcMs: Long, jitMs: Long, storeMb: Long, compiles: Long, run: RunMetrics)
 
   private def gcBeans = {
     import scala.jdk.CollectionConverters._
@@ -106,26 +146,27 @@ object EnvCounters {
     gcMs = gcBeans.map(_.getCollectionTime).sum,
     jitMs = Option(ManagementFactory.getCompilationMXBean)
       .map(_.getTotalCompilationTime).getOrElse(0L),
-    taskGcMs = taskGcMs.sum, runMs = runMs.sum, schedMs = schedMs.sum,
-    tasks = tasks.sum, jobs = jobs.sum, jobMs = jobMs.sum,
     storeMb = storageUsedMb(spark),
-    compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+    compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    run = runTotals)
 
-  /** Post-body snapshot: quiesce the async listener bus first (its drain
-    * API is private[spark]) by polling the task counter until it holds
-    * still for two 5 ms windows, capped at 50 ms — cheap enough to run
-    * after every iteration without perturbing the NEXT timed region. */
+  /** Post-body snapshot: every task and job event of a finished action is
+    * already on the listener bus, so draining it makes the counts exact. */
   def snapAfter(spark: SparkSession): Snap = {
-    var last = -1L
-    var stable = 0
-    var spins = 0
-    while (stable < 2 && spins < 10) {
-      Thread.sleep(5)
-      val cur = tasks.sum + jobs.sum
-      if (cur == last) stable += 1 else { stable = 0; last = cur }
-      spins += 1
-    }
+    GraftBridge.drainListenerBus(spark)
     snap(spark)
+  }
+
+  /** Run `body`, return its result plus the task and job totals it
+    * generated. Scope is the whole context — run one measured body at a
+    * time. */
+  def measure[T](spark: SparkSession)(body: => T): (T, RunMetrics) = {
+    install(spark)
+    GraftBridge.drainListenerBus(spark)
+    val before = runTotals
+    val out = body
+    GraftBridge.drainListenerBus(spark)
+    (out, runTotals - before)
   }
 
   /** Once-per-run I/O facts: the class `file:` resolves to, and whether
@@ -141,15 +182,17 @@ object EnvCounters {
 
   /** JSON object of the deltas across one iteration; `storeMb` reports
     * the START value (occupancy entering the iteration), not a delta. */
-  def deltaJson(before: Snap, after: Snap): String =
+  def deltaJson(before: Snap, after: Snap): String = {
+    val d = after.run - before.run
     s"""{"gc_ms":${after.gcMs - before.gcMs},""" +
       s""""jit_ms":${after.jitMs - before.jitMs},""" +
-      s""""task_gc_ms":${after.taskGcMs - before.taskGcMs},""" +
-      s""""run_ms":${after.runMs - before.runMs},""" +
-      s""""sched_ms":${after.schedMs - before.schedMs},""" +
-      s""""tasks":${after.tasks - before.tasks},""" +
-      s""""jobs":${after.jobs - before.jobs},""" +
-      s""""job_ms":${after.jobMs - before.jobMs},""" +
+      s""""task_gc_ms":${d.taskGcMs},""" +
+      s""""run_ms":${d.runMs},""" +
+      s""""sched_ms":${d.schedMs},""" +
+      s""""tasks":${d.tasks},""" +
+      s""""jobs":${d.jobs},""" +
+      s""""job_ms":${d.jobMs},""" +
       s""""codegen_compiles":${after.compiles - before.compiles},""" +
       s""""store_mb0":${before.storeMb}}"""
+  }
 }

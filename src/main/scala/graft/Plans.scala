@@ -36,7 +36,7 @@ object Plans {
       md ++= s"exchanges=${s.exchanges} broadcastJoins=${s.broadcastJoins} " +
         s"sortMergeJoins=${s.sortMergeJoins} hashAggs=${s.hashAggregates} " +
         s"scans=${s.scans}\n\n"
-      md ++= "```\n" + PlanDescriber.normalized(df).take(6000) + "\n```\n"
+      md ++= "```\n" + PlanDescriber.normalized(df) + "\n```\n"
     }
     Files.writeString(Paths.get(outFile), md.toString)
     spark.stop()

@@ -87,4 +87,19 @@ class BenchLineSpec extends AnyFunSuite {
     assert(qs.has("q01") && qs.get("q01").isNull)
     assert(qs.get("q02").asDouble() == 0.5)
   }
+
+  test("per-iteration env object keeps its ten detail-file keys") {
+    import scala.jdk.CollectionConverters._
+    val run0 = EnvCounters.RunMetrics(1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13)
+    val run1 = EnvCounters.RunMetrics(8, 3, 30, 5, 50, 7, 70, 80, 90, 100, 110, 120, 130)
+    val before = EnvCounters.Snap(gcMs = 10, jitMs = 20, storeMb = 33, compiles = 40, run = run0)
+    val after = EnvCounters.Snap(gcMs = 15, jitMs = 27, storeMb = 99, compiles = 42, run = run1)
+    val node = mapper.readTree(EnvCounters.deltaJson(before, after))
+    assert(node.fieldNames.asScala.toSeq === Seq("gc_ms", "jit_ms", "task_gc_ms",
+      "run_ms", "sched_ms", "tasks", "jobs", "job_ms", "codegen_compiles", "store_mb0"))
+    assert(node.get("tasks").asLong() == 7 && node.get("jobs").asLong() == 1)
+    assert(node.get("job_ms").asLong() == 27 && node.get("run_ms").asLong() == 45)
+    assert(node.get("codegen_compiles").asLong() == 2)
+    assert(node.get("store_mb0").asLong() == 33, "store_mb0 is the START value")
+  }
 }

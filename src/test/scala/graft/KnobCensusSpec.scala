@@ -5,16 +5,19 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Census of the settable values main code reads: every environment
-  * variable (`sys.env` / `System.getenv`) and every `graft.*` session conf
-  * key literal under `src/main` must be on an allow-list below with a
-  * one-line reason, and every allow-list entry must still be read
-  * somewhere. A new knob therefore has to justify itself here, and a
-  * knob whose last reader is deleted leaves the list with it. Switches
-  * that exist only to turn a mechanism off for an A/B do not belong:
-  * an ablation compares the parent commit with the change instead.
+  * variable (`sys.env` / `System.getenv`) and every `graft.*` or
+  * `spark.graft.*` session conf key literal under `src/main` must be on
+  * an allow-list below with a one-line reason, and every allow-list
+  * entry must still be read somewhere. A new knob therefore has to
+  * justify itself here, and a knob whose last reader is deleted leaves
+  * the list with it. Switches that exist only to turn a mechanism off
+  * for an A/B do not belong: an ablation compares the parent commit with
+  * the change instead.
   * Entry points get the same census: every object under `src/main` that
   * defines `main` is listed with a one-line reason, so a one-off probe
-  * main has to justify itself the way a knob does. */
+  * main has to justify itself the way a knob does. So do the listeners
+  * main code adds to the Spark context: one collector counts tasks and
+  * jobs, and a second one cannot come back unnoticed. */
 class KnobCensusSpec extends AnyFunSuite {
 
   private val allowedEnv: Map[String, String] = Map(
@@ -33,7 +36,9 @@ class KnobCensusSpec extends AnyFunSuite {
     "graft.simhash.interpretedTail" ->
       "t_simhash_neardup's size-gate signal, read back by its execution-regime conf",
     "graft.stream.filesPerTrigger" ->
-      "StreamingSpec's batching-invariance parameter for the streaming replays")
+      "StreamingSpec's batching-invariance parameter for the streaming replays",
+    "spark.graft.reliableCheckpointDir" ->
+      "a durable path that switches the ccLabels cuts to reliable checkpoints (GraphOpsSpec)")
 
   private val allowedMains: Map[String, String] = Map(
     "graft.Bench" -> "driver bench contract: one JSON line over the registry",
@@ -47,6 +52,14 @@ class KnobCensusSpec extends AnyFunSuite {
     "graft.Plans" -> "regenerates PLANS.md",
     "graft.PlanDump" -> "raw formatted plans for before/after plan diffs",
     "graft.ConfProbe" -> "same-JVM session-conf A/B over registry queries")
+
+  private val allowedListeners: Map[String, String] = Map(
+    "src/main/scala/graft/EnvCounters.scala" ->
+      "the task and job counters of the bench detail files and `measure`",
+    "src/main/scala/graft/FaultCheck.scala" ->
+      "counts executor removals to prove the kill happened",
+    "src/main/scala/graft/ConfProbe.scala" ->
+      "records each stage's task count, a plan shape rather than a counter")
 
   /** (file:line, line) of every non-comment line of main Scala source. */
   private lazy val codeLines: Seq[(String, String)] = {
@@ -69,7 +82,7 @@ class KnobCensusSpec extends AnyFunSuite {
   private val EnvAccess = """sys\.env|System\.getenv""".r
   private val EnvRead =
     """(?:sys\.env(?:\.(?:get|getOrElse|contains|apply))?|System\.getenv)\(\s*"([A-Za-z0-9_]+)"""".r
-  private val ConfKey = """"(graft\.[A-Za-z0-9_.]+)"""".r
+  private val ConfKey = """"((?:spark\.)?graft\.[A-Za-z0-9_.]+)"""".r
 
   /** Variable name of each env access, or Left(site) when the name is
     * not a literal (a computed or whole-map read cannot be audited). */
@@ -130,5 +143,19 @@ class KnobCensusSpec extends AnyFunSuite {
       s"main objects not allowed (add a reason or delete the main): $unlisted")
     val stale = allowedMains.keySet -- mains
     assert(stale.isEmpty, s"allow-listed main objects no longer defined: $stale")
+  }
+
+  test("every SparkListener main code adds is on the allow-list, once per file") {
+    val sites = codeLines.collect {
+      case (site, line) if line.contains("addSparkListener") => site
+    }
+    val byFile = sites.groupBy(_.takeWhile(_ != ':'))
+    val unlisted = byFile.collect {
+      case (f, s) if !allowedListeners.contains(f) || s.size > 1 => s
+    }.flatten
+    assert(unlisted.isEmpty,
+      s"listener sites not allowed (add a reason or fold into EnvCounters): $unlisted")
+    val stale = allowedListeners.keySet -- byFile.keySet
+    assert(stale.isEmpty, s"allow-listed listener files no longer add one: $stale")
   }
 }

@@ -56,8 +56,7 @@ class LocalDimSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       joined.collect()
-      // drain the async bus far enough to count this query's jobs
-      Thread.sleep(300)
+      org.apache.spark.sql.graft.GraftBridge.drainListenerBus(spark)
       // supplier at sf0.001 is ALSO under the inline threshold, so the
       // whole query may run entirely driver-free of scans — accept any
       // job count as long as no 1-task broadcast-build job appears

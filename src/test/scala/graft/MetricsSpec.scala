@@ -1,7 +1,5 @@
 package graft
 
-import graft.plans.Metrics
-
 /** Measured data-volume invariants — the execution-side twin of
   * PlanSpec's structural pins. Plan text promises map-side combine and
   * broadcast joins; these specs COUNT the shuffled records of real runs,
@@ -9,7 +7,7 @@ import graft.plans.Metrics
 class MetricsSpec extends SparkSpec {
 
   private def run(name: String) =
-    Metrics.measure(spark) {
+    EnvCounters.measure(spark) {
       Registry.byName(name).run(spark, sf0001).collect()
     }._2
 
@@ -47,12 +45,12 @@ class MetricsSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val d = Catalog.table(spark, sf0001, "documents")
     // the engine's dedup shape: shuffle only (md5 digest, min doc_id)
-    val (_, digests) = Metrics.measure(spark) {
+    val (_, digests) = EnvCounters.measure(spark) {
       d.groupBy(md5(col("text").cast("binary")).as("dg"))
         .agg(min(col("doc_id")).as("keep")).count()
     }
     // the naive shape: full text rows through a distinct's shuffle
-    val (_, texts) = Metrics.measure(spark) {
+    val (_, texts) = EnvCounters.measure(spark) {
       d.select(col("text")).distinct().count()
     }
     info(s"digest-agg shuffle=${digests.shuffleWriteBytes} B vs " +

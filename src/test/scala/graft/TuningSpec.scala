@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 /** Engine tuning-knob surface + spill-under-pressure proof (≡ the
@@ -61,14 +60,6 @@ class TuningSpec extends SparkSpec {
   }
 
   test("sort-merge-join buffers past the spill reservation spill and stay correct") {
-    val spilled = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new SparkListener {
-      override def onTaskEnd(end: SparkListenerTaskEnd): Unit = {
-        val m = end.taskMetrics
-        if (m != null) spilled.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
     try {
       // force the SMJ path (no broadcast) with a 2-row buffer reservation:
       // every multi-line order overflows the match buffer into the
@@ -81,21 +72,19 @@ class TuningSpec extends SparkSpec {
       val o = Catalog.table(spark, sf0001, "orders")
       val l = Catalog.table(spark, sf0001, "lineitem")
       val joined = o.join(l, col("o_orderkey") === col("l_orderkey"))
-      val n = joined.count()
-      joined.collect() // finalize the adaptive plan before inspecting it
+      val (n, m) = EnvCounters.measure(spark) {
+        val n = joined.count()
+        joined.collect() // finalize the adaptive plan before inspecting it
+        n
+      }
       assert(graft.plans.PlanDescriber.simpleString(joined).contains("SortMergeJoin"),
         "join did not take the sort-merge path")
       restoreJoinConfs()
       val expected = o.join(l, col("o_orderkey") === col("l_orderkey")).count()
       assert(n === expected, "spilled SMJ result must match the default-path join")
-      val deadline = System.nanoTime() + 15L * 1000L * 1000L * 1000L
-      while (spilled.get() == 0L && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(spilled.get() > 0L,
+      assert(m.spillBytes > 0L,
         "expected SMJ buffer spill bytes > 0 under the 2-row reservation")
-    } finally {
-      restoreJoinConfs()
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    } finally restoreJoinConfs()
   }
 
   /** Restore the GraftSession-pinned join/spill confs (a plain `unset`
@@ -110,14 +99,6 @@ class TuningSpec extends SparkSpec {
   }
 
   test("window buffers past the spill reservation spill to disk and stay correct") {
-    val spilled = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new SparkListener {
-      override def onTaskEnd(end: SparkListenerTaskEnd): Unit = {
-        val m = end.taskMetrics
-        if (m != null) spilled.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
     try {
       // 32-row reservation: every window partition (~2k rows per
       // l_returnflag at sf0.001) must overflow the in-memory buffer and
@@ -127,24 +108,22 @@ class TuningSpec extends SparkSpec {
       spark.conf.set("spark.sql.windowExec.buffer.spill.threshold", "32")
       val l = Catalog.table(spark, sf0001, "lineitem")
       val w = org.apache.spark.sql.expressions.Window.partitionBy(col("l_returnflag"))
-      val res = l.select(col("l_returnflag"), count(lit(1)).over(w).as("n"))
-        .distinct().orderBy(col("l_returnflag"))
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      val (res, m) = EnvCounters.measure(spark) {
+        l.select(col("l_returnflag"), count(lit(1)).over(w).as("n"))
+          .distinct().orderBy(col("l_returnflag"))
+          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      }
       spark.conf.unset("spark.sql.windowExec.buffer.in.memory.threshold")
       spark.conf.unset("spark.sql.windowExec.buffer.spill.threshold")
       val expected = l.groupBy(col("l_returnflag")).agg(count(lit(1)).as("n"))
         .orderBy(col("l_returnflag"))
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       assert(res === expected, "spilled window result must match the aggregate")
-      // task-end events arrive on the async listener bus
-      val deadline = System.nanoTime() + 15L * 1000L * 1000L * 1000L
-      while (spilled.get() == 0L && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(spilled.get() > 0L,
+      assert(m.spillBytes > 0L,
         "expected task metrics to record spill bytes > 0 under the 32-row reservation")
     } finally {
       spark.conf.unset("spark.sql.windowExec.buffer.in.memory.threshold")
       spark.conf.unset("spark.sql.windowExec.buffer.spill.threshold")
-      spark.sparkContext.removeSparkListener(listener)
     }
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.{Metrics, ZOrder}
+import graft.plans.ZOrder
 import org.apache.spark.sql.functions._
 
 /** Z-order layout: interleave correctness against a bit-twiddling
@@ -42,7 +42,7 @@ class ZOrderSpec extends SparkSpec {
         32, s"$base/zorder")
 
       def readCount(path: String): (Long, Long) = {
-        val (n, m) = Metrics.measure(spark) {
+        val (n, m) = EnvCounters.measure(spark) {
           spark.read.parquet(path).filter(col("l_suppkey") <= 2).count()
         }
         (n, m.inputRecords)
