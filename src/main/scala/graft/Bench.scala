@@ -60,60 +60,35 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
       "/tmp/graft_bench_detail.json")
+    // optional subset for local iteration; the contract run sets none
+    val names = Runner.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     val spark = GraftSession.get()
     EnvCounters.install(spark)
     // one warm-up action so JVM/codegen startup isn't billed to query 1
     Catalog.table(spark, sfDir, "lineitem").count()
-    var failed = List.empty[String]
     // three iterations, min reported: a single-shot timing in a 32-thread
     // shared JVM is vulnerable to one-off GC/compilation spikes (r1 showed
     // a 50-row projection "taking" 65 s once and 0.4 s on re-run); min-of-3
     // matches the repo's bench_results protocol so the driver artifact and
     // the local record are directly comparable
     val iterations = 3
-    // optional subset for local iteration (the driver never sets this)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").toSet)
-    val selected = only.fold(SparkEntry.queries)(names =>
-      SparkEntry.queries.view.filterKeys(names).toMap)
     // per query: (name, min good wall, env array json, min-iter env json)
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val attempts = (1 to iterations).map { _ =>
-        val env0 = EnvCounters.snap(spark)
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            false
-          }
-        val wall = (System.nanoTime() - t0) / 1e9
-        // environment counters AFTER the timed region (r9 verdict item 1:
-        // the adjudicated artifact must explain its own per-query deltas)
-        val envJson = EnvCounters.deltaJson(env0, EnvCounters.snapAfter(spark))
-        (wall, ok, envJson)
-      }
+    val results = Runner.each(spark, sfDir, names, "bench") { (name, query) =>
+      val attempts = Runner.timed(spark, "bench", name, query, iterations)
       // min over SUCCESSFUL runs only (a fast time-to-error must not stand
-      // in for a real timing); "failed" marks queries with NO good run, so
-      // a transient single-iteration failure neither poisons the timing
-      // nor falsely brands the query broken. A query with zero good runs
-      // reports null and contributes NOTHING to total — mixing
-      // time-to-error into the headline would make failures look cheap.
-      val good = attempts.filter(_._2)
-      if (good.isEmpty) failed ::= name
-      // fresh-state boundary between queries (see GraftSession.releaseQueryState)
-      SparkEntry.restore(spark) // drop this query's execConf overrides
-      GraftSession.releaseQueryState(spark)
-      val envArr = attempts.map { case (wall, _, env) =>
+      // in for a real timing); "failed" marks queries with NO good run. A
+      // query with zero good runs reports null and contributes NOTHING to
+      // total — mixing time-to-error into the headline would make
+      // failures look cheap.
+      val good = attempts.filter(_.ok)
+      val envArr = attempts.map { t =>
         // wall repeated inside the env entry so one iteration's counters
         // and its timing read together without cross-indexing
-        s"""{"wall_s":$wall,"env":$env}"""
+        s"""{"wall_s":${t.wallS},"env":${t.env}}"""
       }.mkString("[", ",", "]")
-      val minEnv = if (good.isEmpty) None
-        else Some(good.minBy(_._1)._3)
-      (name, if (good.nonEmpty) Some(good.map(_._1).min) else None,
-        envArr, minEnv)
-    }
+      (name, good.map(_.wallS).minOption, envArr, good.minByOption(_.wallS).map(_.env))
+    }.map(o => o.result.getOrElse((o.name, None, "[]", None)))
+    val failed = results.collect { case (name, None, _, _) => name }
     val total = results.flatMap(_._2).sum
 
     // ---- detail file: everything, every iteration, full env counters,
@@ -123,7 +98,7 @@ object Bench {
       "\"" + k + "\":{\"min_s\":" + v.map(_.toString).getOrElse("null") +
         ",\"iterations\":" + envArr + "}"
     }.mkString("{", ",", "}")
-    val failedJson = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val watchEnv = results
       .filter { case (k, _, _, me) => watch.contains(k) && me.nonEmpty }
       .map { case (k, v, _, me) =>

@@ -17,7 +17,7 @@ object ConfProbe {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ConfProbe <sfDir> <q1,...> [iters]")
     val sfDir = args(0)
-    val names = args(1).split(",").toSeq
+    val names = Runner.select(Some(args(1)))
     val iters = if (args.length > 2) args(2).toInt else 4
     val spec = sys.env.getOrElse("GRAFT_PROBE_VARIANTS", "")
     val variants: Seq[(String, Map[String, String])] =
@@ -53,24 +53,25 @@ object ConfProbe {
       conf.foreach { case (k, v) => spark.conf.set(k, v) }
       try {
         stages.clear()
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        SparkEntry.restore(spark)
-        val ms = (System.nanoTime() - t0) / 1e6
-        val key = (name, vn)
-        best(key) = math.min(best.getOrElse(key, Double.MaxValue), ms)
-        val shape = {
-          import scala.jdk.CollectionConverters._
-          stages.asScala.mkString("+")
+        val timing = Runner.each(spark, sfDir, Seq(name), "confprobe") { (_, query) =>
+          Runner.timed(spark, "confprobe", name, query, 1).head
+        }.head.result.toOption.filter(_.ok)
+        timing.foreach { t =>
+          val ms = t.wallS * 1e3
+          val key = (name, vn)
+          best(key) = math.min(best.getOrElse(key, Double.MaxValue), ms)
+          val shape = {
+            import scala.jdk.CollectionConverters._
+            stages.asScala.mkString("+")
+          }
+          println(f"[confprobe] iter$i $name%-28s $vn%-10s $ms%8.1f ms  stages=$shape")
         }
-        println(f"[confprobe] iter$i $name%-28s $vn%-10s $ms%8.1f ms  stages=$shape")
       } finally saved.foreach { case (k, v) =>
         v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
       }
     }
     println("[confprobe] ==== mins ====")
     for (name <- names; (vn, _) <- variants)
-      println(f"[confprobe] $name%-28s $vn%-10s ${best((name, vn))}%8.1f ms")
+      println(f"[confprobe] $name%-28s $vn%-10s ${best.getOrElse((name, vn), Double.NaN)}%8.1f ms")
   }
 }

@@ -51,23 +51,13 @@ object FaultCheck {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: FaultCheck <sfDir> <outJson>")
     val Array(sfDir, outJson) = args
-    val classesDir = new java.io.File("target/scala-2.13/classes").getAbsolutePath
-    val spark = GraftSession
-      .builderWith(GraftTuning(cpus = 32), master = Some("local-cluster[2,16,3072]"))
-      .config("spark.executor.memory", "2g")
-      .config("spark.executor.extraClassPath", classesDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ClusterCheck.session("2,16,3072")
     val removed = new AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onExecutorRemoved(e: SparkListenerExecutorRemoved): Unit = {
         removed.incrementAndGet(); ()
       }
     })
-    val nExec = waitForExecutors(spark, want = 2)
-    require(nExec >= 2,
-      s"local-cluster brought up only $nExec executor JVM(s) — nothing to kill")
-    println(s"[fault-check] $nExec executor JVMs up")
 
     def query(inject: Boolean) = {
       val mid = Catalog.table(spark, sfDir, "lineitem")
@@ -109,7 +99,7 @@ object FaultCheck {
     // bit-identical either way. (r9 verdict item 4; the production
     // answer at real cluster scale is the file-backed _mat path, which
     // keeps lineage on disk.)
-    val waitBack = waitForExecutors(spark, want = 2)
+    val waitBack = ClusterCheck.waitForExecutors(spark, want = 2)
     println(s"[fault-check] phase 2: $waitBack executors up (worker respawn)")
     val minhash = SparkEntry.queries("t_minhash_lsh")
     def digest() = minhash(spark, sfDir)
@@ -147,7 +137,7 @@ object FaultCheck {
         case e: Throwable =>
           println(s"[fault-check] in-flight failure (expected for a " +
             s"lineage-truncated plan): ${e.getClass.getSimpleName}")
-          waitForExecutors(spark, want = 2)
+          ClusterCheck.waitForExecutors(spark, want = 2)
           ("failed_then_fresh_retry", digest())
       }
     val phase2Ms = (System.nanoTime() - t2) / 1e6
@@ -165,16 +155,9 @@ object FaultCheck {
       s"minhash result diverged after executor loss: base=$base2 got=$result2")
 
     // provenance-stamped artifact, same contract as BenchFull
-    val commit =
-      try new String(Runtime.getRuntime.exec(Array("git", "rev-parse", "HEAD"))
-        .getInputStream.readAllBytes()).trim
-      catch { case _: Throwable => "unknown" }
-    val fixtureMtime =
-      try new java.io.File(sfDir).listFiles().map(_.lastModified()).max / 1000
-      catch { case _: Throwable => 0L }
     Files.writeString(Paths.get(outJson),
       s"""{"context":{"engine":"graft-spark","master":"local-cluster[2,16,3072]",""" +
-        s""""commit":"$commit","testdata_mtime":$fixtureMtime,""" +
+        Runner.provenance(sfDir) + "," +
         s""""sf_dir":"$sfDir"},"executors_removed":$nRemoved,""" +
         s""""rows":${healed.length},"healed_ms":${healMs.round},""" +
         s""""identical_to_baseline":true,""" +
@@ -184,16 +167,5 @@ object FaultCheck {
     println(s"[fault-check] PASS -> $outJson")
     SparkEntry.restore(spark) // drop the last query's execConf overrides
     spark.stop()
-  }
-
-  private def waitForExecutors(
-      spark: org.apache.spark.sql.SparkSession, want: Int): Int = {
-    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    var n = 0
-    while (n < want && System.nanoTime() < deadline) {
-      n = spark.sparkContext.getExecutorMemoryStatus.size - 1
-      if (n < want) Thread.sleep(500)
-    }
-    n
   }
 }

@@ -29,40 +29,12 @@ object FuzzRunner {
         require(i > 0, s"malformed fuzz line: $line")
         (line.substring(0, i), line.substring(i + 1))
       }
-    val out = new java.io.File(outDir)
-    // same ownership guard as Verify: never recursively delete a dir
-    // that is not provably a prior run's dump
-    if (out.exists()) {
-      val children = Option(out.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-      if (children.isEmpty || children.exists(f =>
-        f.getName == "oracle_sql.json" || f.getName == ".graft-verify")) {
-        def rm(f: java.io.File): Unit = {
-          // listFiles returns null on I/O error / concurrent removal
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(); ()
-        }
-        rm(out)
-      }
-    }
-    out.mkdirs()
-    Files.writeString(Paths.get(s"$outDir/.graft-verify"), "fuzz-run\n")
-    var failed = List.empty[String]
-    queries.foreach { case (name, sql) =>
-      try spark.sql(sql).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        failed ::= name
-        System.err.println(s"[fuzz] $name failed to execute: ${e.getMessage}")
-      }
-    }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      queries.map { case (n, s) => s"${q(n)}: ${q(s)}" }
-        .mkString("{", ",", "}"))
+    Runner.claim(outDir, "fuzz")
+    val failed = queries.filter { case (name, sql) =>
+      Runner.attempt("fuzz", name)(spark.sql(sql).coalesce(1).write
+        .mode("overwrite").parquet(s"$outDir/$name")).isLeft
+    }.map(_._1)
+    Runner.writeOracleSql(outDir, queries.toSeq)
     require(failed.isEmpty,
       s"fuzz queries failed to EXECUTE on Spark (dialect bug in the " +
         s"generator, fix gen_fuzz.py): ${failed.sorted.mkString(", ")}")

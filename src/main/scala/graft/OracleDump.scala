@@ -16,20 +16,7 @@ object OracleDump {
     require(args.length >= 1, "usage: OracleDump <outDir>")
     val dir = Paths.get(args(0))
     Files.createDirectories(dir)
-    def esc(s: String): String =
-      s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
-    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
-      .mkString("{\n", ",\n", "\n}\n")
-    Files.writeString(dir.resolve("oracle_sql.json"), json)
+    Runner.writeOracleSql(args(0), SparkEntry.oracleSql.toSeq.sortBy(_._1))
     println(s"[oracledump] ${SparkEntry.oracleSql.size} oracle entries -> " +
       dir.resolve("oracle_sql.json"))
   }

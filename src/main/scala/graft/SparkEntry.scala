@@ -30,11 +30,7 @@ object SparkEntry {
       // layout/store writes) must never inherit the PREVIOUS plan's
       // single-shot conf (round-7 verdict item 3) — nor a previous
       // query's execConf overrides
-      prevExecConf.foreach { case (k, v) =>
-        v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-      }
-      prevExecConf = Map.empty
-      graft.plans.AdaptiveGate.reset(spark)
+      restore(spark)
       val df = q.run(spark, dir)
       if (!q.needsAqe) graft.plans.AdaptiveGate.tune(spark, df)
       // applied AFTER the body: eager build-time work (localCheckpoint
@@ -49,17 +45,20 @@ object SparkEntry {
       df
     }
 
-  /** Eagerly put back any execConf overrides left by the most recent
-    * tuned() invocation. Driver mains call this after a query's ACTION
-    * completes, so the session never carries a query-specific conf (e.g.
-    * `spark.sql.codegen.wholeStage=false`) into unrelated follow-on work —
-    * the r12 advisor flagged that the last registry query's overrides
-    * otherwise persist until the next tuned() call or session end. */
+  /** Eagerly put back everything the most recent tuned() invocation set:
+    * its execConf overrides and the gate's execution-mode conf. The
+    * runner's query boundary ([[Runner.each]]) calls this after a query's
+    * ACTION completes, so the session never carries a query-specific conf
+    * (e.g. `spark.sql.codegen.wholeStage=false`, or the gate's
+    * `spark.sql.adaptive.enabled=false`) into unrelated follow-on work —
+    * a conf set between two queries (ConfProbe's variants) would
+    * otherwise be overwritten by the next tuned()'s gate reset. */
   def restore(spark: SparkSession): Unit = {
     prevExecConf.foreach { case (k, v) =>
       v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
     prevExecConf = Map.empty
+    graft.plans.AdaptiveGate.reset(spark)
   }
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -1,7 +1,7 @@
 package graft.multimodal
 
 import graft.{Catalog, GQuery}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: images/audio/video as opaque `binary`
@@ -243,7 +243,6 @@ object MediaOps {
       "m_media_features",
       "binary-column decode + feature extraction via mapPartitions",
       (spark, dir) => {
-        import spark.implicits._
         val feats = extractFeatures(attachMedia(spark, dir))
         feats.select(col("doc_id"), col("n_bytes"),
             floor(col("brightness") / 10).cast("int").as("bright_bucket"),
@@ -273,7 +272,6 @@ object MediaOps {
       "m_frame_stats",
       "resize + frame-sample pipeline: per-frame-index byte stats",
       (spark, dir) => {
-        import spark.implicits._
         val frames = sampleFrames(resize(attachMedia(spark, dir), 256), 4, 32)
         frames.select(col("frame_idx"), length(col("frame")).as("fb"))
           .groupBy(col("frame_idx"))
@@ -311,7 +309,6 @@ object MediaOps {
       // discipline, TextOps.scala) bolts onto these buckets when pair
       // output is wanted.
       (spark, dir) => {
-        import spark.implicits._
         val prof = blockProfile(attachMedia(spark, dir))
         prof.filter(col("n_bytes") > 0)
           .select(col("doc_id"),

@@ -63,7 +63,7 @@ object OnePartitionSort extends Rule[LogicalPlan] {
     case gl @ GlobalLimit(_, ll @ LocalLimit(_, pr @ Project(_, s: Sort))) =>
       gl.withNewChildren(Seq(ll.withNewChildren(Seq(pr.withNewChildren(Seq(
         s.withNewChildren(Seq(rewrite(s.child)))))))))
-    case s @ Sort(order, true, child, hint) =>
+    case Sort(order, true, child, hint) =>
       Sort(order, global = false,
         Repartition(1, shuffle = true, rewrite(child)), hint)
     case other =>

@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.{Catalog, GQuery}
 import graft.util.Num._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 

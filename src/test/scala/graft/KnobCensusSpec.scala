@@ -26,7 +26,6 @@ class KnobCensusSpec extends AnyFunSuite {
     "SPARK_GRAFT_SF_DIR" -> "Bench: data directory of the driver bench",
     "SPARK_GRAFT_BENCH_DETAIL" -> "Bench: path of the per-iteration detail file",
     "SPARK_GRAFT_BENCH_ONLY" -> "Bench: restricts a run to the named queries",
-    "GRAFT_CLUSTER_ONLY" -> "ClusterCheck: restricts the multi-JVM run to the named queries",
     "GRAFT_CLUSTER_TOPOLOGY" -> "ClusterCheck: executors, cores and MB per executor on small hosts",
     "GRAFT_PROBE_VARIANTS" -> "ConfProbe: the conf variants of its same-JVM A/B")
 
@@ -42,7 +41,7 @@ class KnobCensusSpec extends AnyFunSuite {
 
   private val allowedMains: Map[String, String] = Map(
     "graft.Bench" -> "driver bench contract: one JSON line over the registry",
-    "graft.BenchFull" -> "per-query iteration timings of tools/round_artifacts.sh",
+    "graft.BenchFull" -> "per-query iteration timings that tools/merge_bench.py compares",
     "graft.Verify" -> "correctness dump for the DuckDB oracle compare (tools/gate.sh)",
     "graft.OracleDump" -> "oracle SQL without running queries (tools/round_artifacts.sh)",
     "graft.ClusterCheck" -> "the registry across two executor JVMs (tools/round_artifacts.sh)",

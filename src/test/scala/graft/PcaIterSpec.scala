@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.queries.VectorOps
 
@@ -21,7 +20,7 @@ class PcaIterSpec extends SparkSpec {
       .toDF("i", "row_arr")
     var v = spark.range(1).select(expr(
       s"transform(sequence(1, ${mrows.length}), p -> CAST(1.0 AS DOUBLE))").as("v_arr"))
-    for (t <- 1 to iters) {
+    for (_ <- 1 to iters) {
       val w = cmat.crossJoin(broadcast(v))
         .select(col("i"), expr(
           "aggregate(zip_with(row_arr, v_arr, (x, y) -> x * y)," +

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Aggregators
-import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 
 /** Property-based checks of the pure kernels (no Spark session needed —

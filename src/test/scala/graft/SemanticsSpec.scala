@@ -50,7 +50,6 @@ class SemanticsSpec extends SparkSpec {
   }
 
   test("cosine top-k ranks an identical vector first") {
-    val e = Catalog.table(spark, sf0001, "embeddings")
     val knn = Registry.byName("v_knn_brute").run(spark, sf0001)
       .as[(Long, Int, Long, Double)].collect()
     // per query: 5 neighbors, sims in [-1,1], non-increasing

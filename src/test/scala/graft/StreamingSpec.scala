@@ -100,7 +100,6 @@ class StreamingSpec extends SparkSpec {
       in.addData(Ev(9, 600 * min, "late2", 0.0))
       q2.processAllAvailable()
     } finally q2.stop()
-    import org.apache.spark.sql.functions.col
     val rows = spark.read.parquet(outDir)
       .select("window_start_us", "event_type", "n", "tot_value_fix6")
       .as[(Long, String, Long, Long)].collect().sortBy(r => (r._1, r._2)).toSeq

@@ -131,7 +131,6 @@ class TuningSpec extends SparkSpec {
     // the runtime half of skew handling (plans/Skew.scala is the manual
     // salting half): one hot key dominates the probe side, AQE detects
     // the oversized shuffle partition at stage boundary and splits it
-    import spark.implicits._
     val confs = Map(
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32KB",

@@ -2,8 +2,6 @@ package graft.queries
 
 import graft.SparkSpec
 
-import org.apache.spark.sql.functions._
-
 /** The native simhash60 expression must reproduce the explode+groupBy
   * pipeline it replaced bit-for-bit (same tokenization including empty
   * tokens, same md5-prefix hash, same vote/threshold rule) — that legacy
